@@ -1,8 +1,19 @@
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from python_ctd_spark.session import get_spark
+
+#: The reference's instrument-file corpus (EDF/CNV/BTL/ROS/BL/FSI/CastAway
+#: files).  Tests that assert facts of one particular real file in it carry
+#: ``needs_reference_data`` and are skipped only where the corpus is absent.
+REFERENCE_DATA = Path("/root/reference/tests/data")
+needs_reference_data = pytest.mark.skipif(
+    not REFERENCE_DATA.is_dir(),
+    reason=f"reference test corpus {REFERENCE_DATA} is not present",
+)
 
 
 @pytest.fixture(scope="session")

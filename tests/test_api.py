@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_ctd_spark import CtdFrame
+from tests.conftest import needs_reference_data
 
 
 def test_reference_canonical_chain(spark, multi_cast):
@@ -77,6 +78,7 @@ def test_derived_methods_compose(spark, multi_cast):
     assert len(md) == 3
 
 
+@needs_reference_data
 def test_full_chain_on_real_cast(spark):
     """Reference tests/test_processing_real_data.py:55-66: the canonical
     README chain runs end-to-end on the real 71k-scan cast and produces a

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_ctd_spark.io import readers
+from tests.conftest import needs_reference_data
 
 DATA = Path("/root/reference/tests/data")
 
@@ -21,6 +22,7 @@ def _one_cast(pair):
 
 # -- compression round-trips (reference tests/test_read.py:17-38) -----------
 
+@needs_reference_data
 @pytest.mark.parametrize("fname", ["XBT.EDF", "XBT.EDF.gz", "XBT.EDF.bz2", "XBT.EDF.zip"])
 def test_edf_all_compressions(spark, fname):
     data, meta = readers.from_edf(spark, str(DATA / fname))
@@ -31,6 +33,7 @@ def test_edf_all_compressions(spark, fname):
     assert pdf["pressure"].iloc[0] == pytest.approx(0.0, abs=1.0)
 
 
+@needs_reference_data
 def test_edf_compressions_identical(spark):
     base = readers.from_edf(spark, str(DATA / "XBT.EDF"))[0].orderBy("scan").toPandas()
     for fname in ["XBT.EDF.gz", "XBT.EDF.bz2", "XBT.EDF.zip"]:
@@ -42,6 +45,7 @@ def test_edf_compressions_identical(spark):
 
 # -- positions (reference tests/test_read.py:135-145) -----------------------
 
+@needs_reference_data
 def test_edf_positions(spark):
     _, meta = _one_cast(readers.from_edf(spark, str(DATA / "XBT.EDF")))
     np.testing.assert_almost_equal(meta["lon"], -39.8790283)
@@ -49,6 +53,7 @@ def test_edf_positions(spark):
     assert meta["serial"] is not None
 
 
+@needs_reference_data
 def test_edf_missing_positions(spark):
     _, meta = _one_cast(readers.from_edf(spark, str(DATA / "C3_00005.edf")))
     assert meta["lon"] is None
@@ -57,6 +62,7 @@ def test_edf_missing_positions(spark):
 
 # -- CNV ---------------------------------------------------------------------
 
+@needs_reference_data
 def test_cnv_small(spark):
     data, meta = readers.from_cnv(spark, str(DATA / "small.cnv.bz2"))
     pdf = data.orderBy("scan").toPandas()
@@ -68,16 +74,20 @@ def test_cnv_small(spark):
     assert row["columns"]  # raw<->safe channel registry present
 
 
+@needs_reference_data
 def test_cnv_pressure_label_matrix(spark):
     """press-pass* load, press-fails raises (reference
     tests/test_read.py:164-173)."""
-    for f in sorted(DATA.glob("press-pass*.cnv")):
+    passing = sorted(DATA.glob("press-pass*.cnv"))
+    assert passing, f"no press-pass*.cnv files under {DATA}"
+    for f in passing:
         data, _ = readers.from_cnv(spark, str(f))
         assert data.count() > 0
     with pytest.raises(Exception, match="pressure/depth column"):
         readers.from_cnv(spark, str(DATA / "press-fails.cnv"))
 
 
+@needs_reference_data
 def test_cnv_mojibake_channel_names(spark):
     """CTD_with_sigma_e00.cnv has a mojibake channel name; sanitation must
     keep it addressable and the registry must recover the raw name."""
@@ -87,6 +97,7 @@ def test_cnv_mojibake_channel_names(spark):
     assert all(r for r in registry)
 
 
+@needs_reference_data
 def test_cnv_multiple_files_one_table(spark):
     paths = [str(DATA / "press-pass-prDE.cnv"), str(DATA / "press-pass-prDM.cnv")]
     data, meta = readers.from_cnv(spark, paths)
@@ -97,6 +108,7 @@ def test_cnv_multiple_files_one_table(spark):
 
 # -- FSI ---------------------------------------------------------------------
 
+@needs_reference_data
 def test_fsi(spark):
     data, _ = readers.from_fsi(spark, str(DATA / "FSI.txt.gz"))
     pdf = data.orderBy("scan").toPandas()
@@ -107,6 +119,7 @@ def test_fsi(spark):
 
 # -- BL ----------------------------------------------------------------------
 
+@needs_reference_data
 def test_bl(spark):
     data, meta = readers.from_bl(spark, str(DATA / "bl" / "bottletest.bl"))
     row = meta.collect()[0]
@@ -118,6 +131,7 @@ def test_bl(spark):
 
 # -- CastAway ----------------------------------------------------------------
 
+@needs_reference_data
 def test_castaway(spark):
     data, meta = readers.from_castaway_csv(spark, str(DATA / "castaway_data.csv"))
     pdf = data.orderBy("scan").toPandas()
@@ -134,6 +148,7 @@ def test_castaway(spark):
 
 # -- BTL (the window reshape) ------------------------------------------------
 
+@needs_reference_data
 def test_btl_reshape(spark):
     data, _ = readers.from_btl(spark, str(DATA / "btl" / "bottletest.btl"))
     pdf = data.orderBy("line").toPandas()
@@ -151,6 +166,7 @@ def test_btl_reshape(spark):
     assert pdf["T090C"].dtype.kind == "f"
 
 
+@needs_reference_data
 def test_btl_duplicate_columns(spark):
     """alt_bottletest.BTL duplicates 'Bottle' -> 'Bottle_' (reference
     tests/test_read.py:107-109); file is cp1252-encoded."""
@@ -160,6 +176,7 @@ def test_btl_duplicate_columns(spark):
     assert "Bottle_" in cols
 
 
+@needs_reference_data
 def test_btl_blank_line_header(spark):
     data, _ = readers.from_btl(spark, str(DATA / "btl" / "blank_line_header.btl"))
     assert "Date" in data.columns
@@ -181,6 +198,7 @@ def test_sniff_decode_utf8_cp1252_latin1():
     assert "�" not in sniff_decode(raw)
 
 
+@needs_reference_data
 def test_latin1_cnv_roundtrip(spark, tmp_path):
     """A latin-1 instrument file (with a byte cp1252 cannot map) loads with
     its data intact — the reference's chardet intent."""
@@ -197,6 +215,7 @@ def test_latin1_cnv_roundtrip(spark, tmp_path):
 
 # -- ROS / rosette summary ---------------------------------------------------
 
+@needs_reference_data
 def test_rosette_bottle_means_golden(spark):
     """Reference doctest golden (ctd/read.py:540-545): per-bottle mean
     pressure of g01l01s01.ros."""
@@ -206,6 +225,7 @@ def test_rosette_bottle_means_golden(spark):
     assert got == [835, 806, 705, 604, 503, 404, 303, 201, 151, 100, 51, 1]
 
 
+@needs_reference_data
 def test_duplicate_stems_get_suffixed_ids(spark, tmp_path):
     """Two files with the same stem in different directories: the first (by
     path) keeps the bare cast_id, the second gets a numeric suffix — the

@@ -15,6 +15,7 @@ from python_ctd_spark.functions.signal_numpy import (
 )
 from python_ctd_spark.operators import signal
 from tests.conftest import collect_sorted
+from tests.conftest import needs_reference_data
 
 
 # -- kernels ----------------------------------------------------------------
@@ -141,6 +142,7 @@ def test_movingaverage_kernel_equals_convolve():
 # -- vendor-golden regression (reference tests/test_processing_real_data.py)
 
 
+@needs_reference_data
 def test_lp_filter_matches_seabird_golden(spark):
     """The reference's strongest external check
     (tests/test_processing_real_data.py:36-42): low-pass filtering the
@@ -176,6 +178,7 @@ def test_lp_filter_matches_seabird_golden(spark):
     )
 
 
+@needs_reference_data
 def test_press_check_idempotent_on_clean_cast(spark):
     """Reference tests/test_processing_real_data.py:45-52: press_check on
     already-monotonic (filtered, downcast) data changes nothing."""
@@ -199,6 +202,7 @@ def test_press_check_idempotent_on_clean_cast(spark):
     )
 
 
+@needs_reference_data
 def test_despike_real_cast_untouched_values_bit_identical(spark):
     """Reference tests/test_processing_real_data.py:25-33: despiking the
     spiked conductivity channel NULLs the spikes and leaves every other
